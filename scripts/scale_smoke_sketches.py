@@ -51,9 +51,9 @@ def main() -> None:
 
     from vectordb_similarity_search_spark.operators.sketches import (
         daily_hll_sketches,
+        ledger_merge_batch,
+        ledger_write,
         rolling_distinct,
-        sketch_ledger_merge_batch,
-        sketch_ledger_write,
     )
 
     # 8g heap: the NAIVE contender's partial-distinct hash state (rows x
@@ -166,11 +166,11 @@ def main() -> None:
 
     store = tempfile.mkdtemp(prefix="smoke_sketch_ledger_")
     path = os.path.join(store, "ledger")
-    sketch_ledger_write(ledger, path)
+    ledger_write("hll", ledger, path)
     batch = gen(N_ROWS // 20, N_DAYS, N_DAYS + 1)
 
     t0 = time.perf_counter()
-    merged = sketch_ledger_merge_batch(spark, batch, path).persist()
+    merged = ledger_merge_batch("hll", batch, path).persist()
     merged.count()
     wall_merge = time.perf_counter() - t0
 

@@ -16,10 +16,10 @@ from pyspark.sql import functions as F
 
 from vectordb_similarity_search_spark.operators.sketches import (
     daily_hll_sketches,
+    ledger_merge_batch,
+    ledger_write,
     rolling_distinct,
     rollup_distinct,
-    sketch_ledger_merge_batch,
-    sketch_ledger_write,
 )
 
 
@@ -128,15 +128,15 @@ def test_leaf_union_equals_direct_sketch(spark, events):
 
 def test_incremental_merge_matches_full_rebuild(spark, events, tmp_path):
     """Ledger maintenance: sketch history once, fold a new batch in via
-    sketch_ledger_merge_batch — estimates must equal a full rebuild over
+    ledger_merge_batch — estimates must equal a full rebuild over
     the union of rows, bit-for-bit, and the sketch column must survive
     the parquet round-trip."""
     old = events.filter(F.to_date("ts") < F.lit("2026-01-15"))
     new = events.filter(F.to_date("ts") >= F.lit("2026-01-15"))
     path = str(tmp_path / "ledger")
-    n = sketch_ledger_write(daily_hll_sketches(old), path)
+    n = ledger_write("hll", daily_hll_sketches(old), path)
     assert n > 0
-    merged = sketch_ledger_merge_batch(spark, new, path)
+    merged = ledger_merge_batch("hll", new, path)
     rebuilt = daily_hll_sketches(events)
 
     def estimates(ledger):
@@ -237,8 +237,8 @@ def test_upsert_stages_executor_side_and_survives_torn_commit(
     import shutil
 
     from vectordb_similarity_search_spark.operators.sketches import (
+        ledger_upsert_batch,
         sketch_ledger_repair,
-        sketch_ledger_upsert_batch,
     )
 
     path = str(tmp_path / "ledger")
@@ -246,7 +246,7 @@ def test_upsert_stages_executor_side_and_survives_torn_commit(
         (1, dt.datetime(2026, 4, 1, 9), 1, "click", 1.0),
         (2, dt.datetime(2026, 4, 2, 9), 2, "click", 1.0),
     ]
-    assert sketch_ledger_upsert_batch(_mk_batch(spark, base), path) == 2
+    assert ledger_upsert_batch("hll", _mk_batch(spark, base), path) == 2
 
     # build the torn state a mid-commit crash leaves: stage the merged
     # slice for day 2 via a REAL upsert against a copy, then transplant
@@ -255,7 +255,7 @@ def test_upsert_stages_executor_side_and_survives_torn_commit(
     shadow = str(tmp_path / "shadow")
     shutil.copytree(path, shadow)
     batch = [(3, dt.datetime(2026, 4, 2, 15), 9, "view", 1.0)]
-    assert sketch_ledger_upsert_batch(_mk_batch(spark, batch), shadow) == 1
+    assert ledger_upsert_batch("hll", _mk_batch(spark, batch), shadow) == 1
     staged = os.path.join(path, "_staging", "day=2026-04-02")
     shutil.copytree(os.path.join(shadow, "day=2026-04-02"), staged)
     with open(os.path.join(path, "_upsert_pending.json"), "w") as fh:
@@ -280,17 +280,17 @@ def test_ledger_meta_rejects_mismatched_maintenance(spark, tmp_path):
     from the stored ledger's build configuration must be refused up
     front, not silently accepted."""
     from vectordb_similarity_search_spark.operators.sketches import (
-        sketch_ledger_upsert_batch,
+        ledger_upsert_batch,
     )
 
     path = str(tmp_path / "ledger")
     rows = [(1, dt.datetime(2026, 5, 1, 9), 1, "click", 1.0)]
-    assert sketch_ledger_upsert_batch(_mk_batch(spark, rows), path) == 1
+    assert ledger_upsert_batch("hll", _mk_batch(spark, rows), path) == 1
     with pytest.raises(ValueError, match="lg_k"):
-        sketch_ledger_upsert_batch(_mk_batch(spark, rows), path, lg_k=14)
+        ledger_upsert_batch("hll", _mk_batch(spark, rows), path, lg_k=14)
     with pytest.raises(ValueError, match="key_col"):
-        sketch_ledger_merge_batch(
-            spark, _mk_batch(spark, rows), path, key_col="event_id"
+        ledger_merge_batch(
+            "hll", _mk_batch(spark, rows), path, key_col="event_id"
         )
 
 
@@ -298,7 +298,7 @@ def test_ledger_custom_columns_thread_through_maintenance(spark, tmp_path):
     """Advisory fix: a ledger built over non-default key/type/ts columns
     is incrementally maintainable by passing the same mapping."""
     from vectordb_similarity_search_spark.operators.sketches import (
-        sketch_ledger_upsert_batch,
+        ledger_upsert_batch,
     )
 
     def mk(rows):
@@ -309,14 +309,14 @@ def test_ledger_custom_columns_thread_through_maintenance(spark, tmp_path):
     path = str(tmp_path / "ledger")
     kw = {"key_col": "actor", "type_col": "action", "ts_col": "stamp"}
     assert (
-        sketch_ledger_upsert_batch(
-            mk([(dt.datetime(2026, 6, 1, 9), 1, "click")]), path, **kw
+        ledger_upsert_batch(
+            "hll", mk([(dt.datetime(2026, 6, 1, 9), 1, "click")]), path, **kw
         )
         == 1
     )
     assert (
-        sketch_ledger_upsert_batch(
-            mk([(dt.datetime(2026, 6, 1, 15), 2, "view")]), path, **kw
+        ledger_upsert_batch(
+            "hll", mk([(dt.datetime(2026, 6, 1, 15), 2, "view")]), path, **kw
         )
         == 1
     )
@@ -413,8 +413,8 @@ def test_cms_upsert_touched_days_only_and_matches_rebuild(spark, tmp_path):
     import os
 
     from vectordb_similarity_search_spark.operators.sketches import (
-        cms_ledger_upsert_batch,
         daily_cms_sketches,
+        ledger_upsert_batch,
     )
 
     path = str(tmp_path / "cms")
@@ -423,7 +423,7 @@ def test_cms_upsert_touched_days_only_and_matches_rebuild(spark, tmp_path):
         (2, dt.datetime(2026, 7, 2, 9), 12, "click", 1.0),
         (3, dt.datetime(2026, 7, 3, 9), 13, "click", 1.0),
     ]
-    assert cms_ledger_upsert_batch(_mk_batch(spark, base), path) == 3
+    assert ledger_upsert_batch("cms", _mk_batch(spark, base), path) == 3
 
     def file_state(day):
         d = os.path.join(path, f"day={day}")
@@ -435,7 +435,7 @@ def test_cms_upsert_touched_days_only_and_matches_rebuild(spark, tmp_path):
 
     before_d1 = file_state("2026-07-01")
     batch = [(4, dt.datetime(2026, 7, 2, 15), 11, "view", 1.0)]
-    assert cms_ledger_upsert_batch(_mk_batch(spark, batch), path) == 1
+    assert ledger_upsert_batch("cms", _mk_batch(spark, batch), path) == 1
     assert file_state("2026-07-01") == before_d1
 
     def cells(df):
@@ -447,7 +447,7 @@ def test_cms_upsert_touched_days_only_and_matches_rebuild(spark, tmp_path):
     assert cells(spark.read.parquet(path)) == cells(rebuilt)
 
     with pytest.raises(ValueError, match="width"):
-        cms_ledger_upsert_batch(_mk_batch(spark, batch), path, width=1024)
+        ledger_upsert_batch("cms", _mk_batch(spark, batch), path, width=1024)
 
 
 # ---------------------------------------------------------------------------
@@ -465,7 +465,7 @@ def test_upsert_rejects_null_day_and_stream_apply_drops(spark, tmp_path):
     import os
 
     from vectordb_similarity_search_spark.operators.sketches import (
-        sketch_ledger_upsert_batch,
+        ledger_upsert_batch,
     )
     from vectordb_similarity_search_spark.streaming.events import (
         apply_sketch_batch,
@@ -477,7 +477,7 @@ def test_upsert_rejects_null_day_and_stream_apply_drops(spark, tmp_path):
     ]
     path = str(tmp_path / "ledger")
     with pytest.raises(ValueError, match="NULL day"):
-        sketch_ledger_upsert_batch(_mk_batch(spark, rows), path)
+        ledger_upsert_batch("hll", _mk_batch(spark, rows), path)
     assert not os.path.isdir(path)  # refused BEFORE any store mutation
 
     assert apply_sketch_batch(_mk_batch(spark, rows), 0, path) is True
@@ -496,22 +496,21 @@ def test_upsert_empty_delta_is_noop(spark, tmp_path):
     import os
 
     from vectordb_similarity_search_spark.operators.sketches import (
-        cms_ledger_upsert_batch,
-        sketch_ledger_upsert_batch,
+        ledger_upsert_batch,
     )
 
     path = str(tmp_path / "ledger")
     empty = _mk_batch(spark, [])
-    assert sketch_ledger_upsert_batch(empty, path) == 0
+    assert ledger_upsert_batch("hll", empty, path) == 0
     assert not os.path.isdir(path)  # no unreadable husk left behind
 
     rows = [(1, dt.datetime(2026, 8, 2, 9), 1, "click", 1.0)]
-    assert sketch_ledger_upsert_batch(_mk_batch(spark, rows), path) == 1
-    assert sketch_ledger_upsert_batch(empty, path) == 0
+    assert ledger_upsert_batch("hll", _mk_batch(spark, rows), path) == 1
+    assert ledger_upsert_batch("hll", empty, path) == 0
     assert spark.read.parquet(path).count() == 1
 
     cpath = str(tmp_path / "cms")
-    assert cms_ledger_upsert_batch(empty, cpath) == 0
+    assert ledger_upsert_batch("cms", empty, cpath) == 0
     assert not os.path.isdir(cpath)
 
 
@@ -528,7 +527,7 @@ def test_concurrent_upsert_raises_descriptive_error(
 
     path = str(tmp_path / "ledger")
     rows = [(1, dt.datetime(2026, 8, 3, 9), 1, "click", 1.0)]
-    assert sk.sketch_ledger_upsert_batch(_mk_batch(spark, rows), path) == 1
+    assert sk.ledger_upsert_batch("hll", _mk_batch(spark, rows), path) == 1
 
     # freeze entry-time repair so the hand-planted marker survives to the
     # commit point, simulating a concurrent writer's marker
@@ -536,18 +535,17 @@ def test_concurrent_upsert_raises_descriptive_error(
     with open(os.path.join(path, "_upsert_pending.json"), "w") as fh:
         fh.write('{"days": [], "staging": "_staging"}')
     with pytest.raises(RuntimeError, match="concurrent"):
-        sk.sketch_ledger_upsert_batch(_mk_batch(spark, rows), path)
+        sk.ledger_upsert_batch("hll", _mk_batch(spark, rows), path)
 
 
 def test_write_sidecar_cross_checked_against_frame(spark, tmp_path):
-    """Advisory fix: sketch_ledger_write/cms_ledger_write must not
+    """Advisory fix: ledger_write for HLL and CMS must not
     record caller kwargs the frame contradicts — a wrong sidecar later
     rejects correct maintenance and validates wrong maintenance."""
     from vectordb_similarity_search_spark.operators.sketches import (
-        cms_ledger_write,
         daily_cms_sketches,
         daily_hll_sketches,
-        sketch_ledger_write,
+        ledger_write,
     )
 
     rows = [
@@ -558,28 +556,28 @@ def test_write_sidecar_cross_checked_against_frame(spark, tmp_path):
 
     # HLL: frame built with lg_k=14, write claims the default 12
     with pytest.raises(ValueError, match="lg_k"):
-        sketch_ledger_write(
-            daily_hll_sketches(batch, lg_k=14), str(tmp_path / "h1")
+        ledger_write(
+            "hll", daily_hll_sketches(batch, lg_k=14), str(tmp_path / "h1")
         )
     # not a ledger frame at all
     with pytest.raises(ValueError, match="missing columns"):
-        sketch_ledger_write(batch, str(tmp_path / "h2"))
+        ledger_write("hll", batch, str(tmp_path / "h2"))
     # matching config passes
     assert (
-        sketch_ledger_write(
-            daily_hll_sketches(batch, lg_k=14), str(tmp_path / "h3"), lg_k=14
+        ledger_write(
+            "hll", daily_hll_sketches(batch, lg_k=14), str(tmp_path / "h3"), lg_k=14
         )
         > 0
     )
 
     # CMS: frame built with depth=8, write claims the default 4
     with pytest.raises(ValueError, match="hash family"):
-        cms_ledger_write(daily_cms_sketches(batch, depth=8), str(tmp_path / "c1"))
+        ledger_write("cms", daily_cms_sketches(batch, depth=8), str(tmp_path / "c1"))
     with pytest.raises(ValueError, match="missing columns"):
-        cms_ledger_write(batch, str(tmp_path / "c2"))
+        ledger_write("cms", batch, str(tmp_path / "c2"))
     assert (
-        cms_ledger_write(
-            daily_cms_sketches(batch, depth=2, width=64),
+        ledger_write(
+            "cms", daily_cms_sketches(batch, depth=2, width=64),
             str(tmp_path / "c3"),
             depth=2,
             width=64,
@@ -716,7 +714,7 @@ def test_qsk_upsert_touched_days_only_and_matches_rebuild(spark, tmp_path):
 
     from vectordb_similarity_search_spark.operators.sketches import (
         daily_qsk_sketches,
-        qsk_ledger_upsert_batch,
+        ledger_upsert_batch,
     )
 
     path = str(tmp_path / "qsk")
@@ -725,7 +723,7 @@ def test_qsk_upsert_touched_days_only_and_matches_rebuild(spark, tmp_path):
         (2, dt.datetime(2026, 9, 12, 9), 12, "click", 40.0),
         (3, dt.datetime(2026, 9, 13, 9), 13, "click", 0.0),
     ]
-    assert qsk_ledger_upsert_batch(_mk_batch(spark, base), path) == 3
+    assert ledger_upsert_batch("qsk", _mk_batch(spark, base), path) == 3
 
     def file_state(day):
         d = os.path.join(path, f"day={day}")
@@ -737,7 +735,7 @@ def test_qsk_upsert_touched_days_only_and_matches_rebuild(spark, tmp_path):
 
     before_d1 = file_state("2026-09-11")
     batch = [(4, dt.datetime(2026, 9, 12, 15), 11, "view", -3.5)]
-    assert qsk_ledger_upsert_batch(_mk_batch(spark, batch), path) == 1
+    assert ledger_upsert_batch("qsk", _mk_batch(spark, batch), path) == 1
     assert file_state("2026-09-11") == before_d1
 
     def cells(df):
@@ -750,13 +748,13 @@ def test_qsk_upsert_touched_days_only_and_matches_rebuild(spark, tmp_path):
     assert cells(spark.read.parquet(path)) == cells(rebuilt)
 
     with pytest.raises(ValueError, match="'k'"):
-        qsk_ledger_upsert_batch(_mk_batch(spark, batch), path, k=64)
+        ledger_upsert_batch("qsk", _mk_batch(spark, batch), path, k=64)
 
 
 def test_qsk_validation_and_write_cross_check(spark, tmp_path):
     from vectordb_similarity_search_spark.operators.sketches import (
         daily_qsk_sketches,
-        qsk_ledger_write,
+        ledger_write,
         rolling_percentiles,
     )
 
@@ -766,10 +764,10 @@ def test_qsk_validation_and_write_cross_check(spark, tmp_path):
         rolling_percentiles(None, 0)
     rows = [(1, dt.datetime(2026, 9, 14, 9), 1, "click", 2.0)]
     with pytest.raises(ValueError, match="missing columns"):
-        qsk_ledger_write(_mk_batch(spark, rows), str(tmp_path / "q1"))
+        ledger_write("qsk", _mk_batch(spark, rows), str(tmp_path / "q1"))
     assert (
-        qsk_ledger_write(
-            daily_qsk_sketches(_mk_batch(spark, rows)), str(tmp_path / "q2")
+        ledger_write(
+            "qsk", daily_qsk_sketches(_mk_batch(spark, rows)), str(tmp_path / "q2")
         )
         == 1
     )
@@ -886,8 +884,8 @@ def test_theta_ledger_lifecycle_and_validation(spark, tmp_path):
 
     from vectordb_similarity_search_spark.operators.sketches import (
         daily_theta_sketches,
-        theta_ledger_upsert_batch,
-        theta_ledger_write,
+        ledger_upsert_batch,
+        ledger_write,
         theta_overlap,
     )
 
@@ -899,7 +897,7 @@ def test_theta_ledger_lifecycle_and_validation(spark, tmp_path):
         (1000 + i, dt.datetime(2026, 10, 1 + i % 3, 10), i % 25, "view", 1.0)
         for i in range(75)
     ]
-    assert theta_ledger_upsert_batch(_mk_batch(spark, rows), path) == 3
+    assert ledger_upsert_batch("theta", _mk_batch(spark, rows), path) == 3
 
     def cells(df):
         return sorted(
@@ -908,23 +906,23 @@ def test_theta_ledger_lifecycle_and_validation(spark, tmp_path):
 
     before = cells(spark.read.parquet(path))
     # replayed upsert: distinct-union is idempotent — store unchanged
-    assert theta_ledger_upsert_batch(_mk_batch(spark, rows), path) == 3
+    assert ledger_upsert_batch("theta", _mk_batch(spark, rows), path) == 3
     assert cells(spark.read.parquet(path)) == before
     assert cells(spark.read.parquet(path)) == cells(
         daily_theta_sketches(_mk_batch(spark, rows))
     )
 
     with pytest.raises(ValueError, match="den"):
-        theta_ledger_upsert_batch(_mk_batch(spark, rows), path, num=1, den=2)
+        ledger_upsert_batch("theta", _mk_batch(spark, rows), path, num=1, den=2)
 
     # write cross-check: a full-rate (den=1 impossible; use num=7,den=8)
     # ledger written claiming a STRICTER predicate is caught
     led_78 = daily_theta_sketches(_mk_batch(spark, rows), num=7, den=8)
     with pytest.raises(ValueError, match="sampling"):
-        theta_ledger_write(led_78, str(tmp_path / "t2"), num=1, den=8)
+        ledger_write("theta", led_78, str(tmp_path / "t2"), num=1, den=8)
     with pytest.raises(ValueError, match="missing columns"):
-        theta_ledger_write(_mk_batch(spark, rows), str(tmp_path / "t3"))
-    assert theta_ledger_write(led_78, str(tmp_path / "t4"), num=7, den=8) > 0
+        ledger_write("theta", _mk_batch(spark, rows), str(tmp_path / "t3"))
+    assert ledger_write("theta", led_78, str(tmp_path / "t4"), num=7, den=8) > 0
 
     # estimates survive the parquet round-trip
     est = theta_overlap(spark.read.parquet(path))
@@ -1002,12 +1000,10 @@ def test_ledger_retention_prunes_old_days_across_kinds(spark, tmp_path):
     reads and rolling queries over the retained horizon still work, and
     the validation knob is checked."""
     from vectordb_similarity_search_spark.operators.sketches import (
-        hh_ledger_upsert_batch,
-        qsk_ledger_upsert_batch,
+        ledger_upsert_batch,
         rolling_hh,
         rolling_percentiles,
         sketch_ledger_retention,
-        sketch_ledger_upsert_batch,
     )
 
     rows = [
@@ -1017,9 +1013,9 @@ def test_ledger_retention_prunes_old_days_across_kinds(spark, tmp_path):
     hll = str(tmp_path / "hll")
     qsk = str(tmp_path / "qsk")
     hh = str(tmp_path / "hh")
-    assert sketch_ledger_upsert_batch(_mk_batch(spark, rows), hll) == 6
-    assert qsk_ledger_upsert_batch(_mk_batch(spark, rows), qsk) == 6
-    assert hh_ledger_upsert_batch(_mk_batch(spark, rows), hh, k=4) == 6
+    assert ledger_upsert_batch("hll", _mk_batch(spark, rows), hll) == 6
+    assert ledger_upsert_batch("qsk", _mk_batch(spark, rows), qsk) == 6
+    assert ledger_upsert_batch("hh", _mk_batch(spark, rows), hh, k=4) == 6
 
     assert sketch_ledger_retention(hll, keep_days=3) == [
         "2026-11-01", "2026-11-02", "2026-11-03",
@@ -1038,16 +1034,12 @@ def test_ledger_retention_prunes_old_days_across_kinds(spark, tmp_path):
     # the two sample kinds share the same day layout — one GC serves
     # all seven ledger kinds
     from vectordb_similarity_search_spark.operators.sketches import (
-        sample_ledger_upsert_batch,
-        stratified_ledger_upsert_batch,
+        ledger_upsert_batch,
     )
 
-    for name, fn in (
-        ("sample", sample_ledger_upsert_batch),
-        ("strat", stratified_ledger_upsert_batch),
-    ):
+    for name, kind in (("sample", "sample"), ("strat", "stratified")):
         store = str(tmp_path / name)
-        assert fn(_mk_batch(spark, rows), store) == 6
+        assert ledger_upsert_batch(kind, _mk_batch(spark, rows), store) == 6
         assert sketch_ledger_retention(store, keep_days=2) == [
             f"2026-11-0{i}" for i in range(1, 5)
         ]
@@ -1295,7 +1287,7 @@ def test_hh_upsert_matches_invariants_and_layout_independent(
     bit-identical across input partitioning AND tournament fan-in
     (buckets is an execution knob, not a semantic one)."""
     from vectordb_similarity_search_spark.operators.sketches import (
-        hh_ledger_upsert_batch,
+        ledger_upsert_batch,
     )
 
     k = 8
@@ -1313,7 +1305,7 @@ def test_hh_upsert_matches_invariants_and_layout_independent(
             )
             if part:
                 batch = batch.repartition(part)
-            hh_ledger_upsert_batch(batch, path, k=k, buckets=buckets)
+            ledger_upsert_batch("hh", batch, path, k=k, buckets=buckets)
     stored = spark.read.parquet(paths[0])
     assert _hh_mass_violations(stored, k) == 0
     exact = _hh_exact_counts(ev)
@@ -1351,7 +1343,7 @@ def test_hh_merge_survives_all_subtracted_summaries(spark, tmp_path):
     later same-day merge of such a summary goes through the left-join
     coalesce path and the bounds stay valid."""
     from vectordb_similarity_search_spark.operators.sketches import (
-        hh_ledger_upsert_batch,
+        ledger_upsert_batch,
     )
 
     k = 2
@@ -1360,7 +1352,7 @@ def test_hh_merge_survives_all_subtracted_summaries(spark, tmp_path):
         for i in range(9)
     ]  # 3 keys x 3 events: top-(k+1) all equal -> items empty, err=3
     path = str(tmp_path / "hh")
-    assert hh_ledger_upsert_batch(_mk_batch(spark, rows), path, k=k) == 1
+    assert ledger_upsert_batch("hh", _mk_batch(spark, rows), path, k=k) == 1
     first = spark.read.parquet(path).collect()
     assert len(first) == 1
     assert first[0]["items"] == [] and first[0]["err"] == 3
@@ -1369,7 +1361,7 @@ def test_hh_merge_survives_all_subtracted_summaries(spark, tmp_path):
         (100 + i, dt.datetime(2026, 11, 1, 10), 7, "click", 1.0)
         for i in range(10)
     ]
-    assert hh_ledger_upsert_batch(_mk_batch(spark, rows2), path, k=k) == 1
+    assert ledger_upsert_batch("hh", _mk_batch(spark, rows2), path, k=k) == 1
     merged = spark.read.parquet(path).collect()[0]
     assert merged["n_events"] == 19
     assert _hh_mass_violations(spark.read.parquet(path), k) == 0
@@ -1385,7 +1377,7 @@ def test_hh_validation_and_write_cross_check(spark, events, tmp_path):
     the counter-positivity check."""
     from vectordb_similarity_search_spark.operators.sketches import (
         daily_hh_sketches,
-        hh_ledger_write,
+        ledger_write,
         rolling_hh,
     )
 
@@ -1396,12 +1388,12 @@ def test_hh_validation_and_write_cross_check(spark, events, tmp_path):
     with pytest.raises(ValueError, match="window_days"):
         rolling_hh(daily_hh_sketches(events, k=4), 0)
     with pytest.raises(ValueError, match="missing columns"):
-        hh_ledger_write(events, str(tmp_path / "x"))
+        ledger_write("hh", events, str(tmp_path / "x"))
 
     ledger = daily_hh_sketches(events, k=8).cache()
-    assert hh_ledger_write(ledger, str(tmp_path / "ok"), k=8) > 0
+    assert ledger_write("hh", ledger, str(tmp_path / "ok"), k=8) > 0
     with pytest.raises(ValueError, match="claimed k"):
-        hh_ledger_write(ledger, str(tmp_path / "badk"), k=512)
+        ledger_write("hh", ledger, str(tmp_path / "badk"), k=512)
     broken = ledger.withColumn(
         "items",
         F.transform(
@@ -1412,7 +1404,7 @@ def test_hh_validation_and_write_cross_check(spark, events, tmp_path):
         ),
     )
     with pytest.raises(ValueError, match="claimed k"):
-        hh_ledger_write(broken, str(tmp_path / "neg"), k=8)
+        ledger_write("hh", broken, str(tmp_path / "neg"), k=8)
 
 
 def test_hh_plans_stay_scale_shaped(spark, events):
@@ -1631,7 +1623,7 @@ def test_sample_upsert_idempotent_and_matches_one_shot(
     replay changes nothing (distinct-union on a unique id)."""
     from vectordb_similarity_search_spark.operators.sketches import (
         daily_sample_rows,
-        sample_ledger_upsert_batch,
+        ledger_upsert_batch,
     )
 
     path = str(tmp_path / "s")
@@ -1639,14 +1631,14 @@ def test_sample_upsert_idempotent_and_matches_one_shot(
         batch = sample_events.filter(
             F.pmod(F.xxhash64("event_id"), F.lit(3)) == b
         )
-        assert sample_ledger_upsert_batch(batch, path) > 0
+        assert ledger_upsert_batch("sample", batch, path) > 0
     snap = lambda df: sorted(  # noqa: E731
         (str(r["day"]), r["id"], r["event_type"], r["value"])
         for r in df.collect()
     )
     s1 = snap(spark.read.parquet(path))
-    sample_ledger_upsert_batch(
-        sample_events.filter(F.pmod(F.xxhash64("event_id"), F.lit(3)) == 1),
+    ledger_upsert_batch(
+        "sample", sample_events.filter(F.pmod(F.xxhash64("event_id"), F.lit(3)) == 1),
         path,
     )
     assert snap(spark.read.parquet(path)) == s1
@@ -1664,9 +1656,9 @@ def test_sample_validation_and_write_cross_check(
     be caught at write time)."""
     from vectordb_similarity_search_spark.operators.sketches import (
         daily_sample_rows,
+        ledger_write,
         rolling_sample_stats,
         sample_grouped_stats,
-        sample_ledger_write,
     )
 
     with pytest.raises(ValueError, match="num"):
@@ -1676,15 +1668,15 @@ def test_sample_validation_and_write_cross_check(
     with pytest.raises(ValueError, match="window_days"):
         rolling_sample_stats(None, 0)
     with pytest.raises(ValueError, match="missing columns"):
-        sample_ledger_write(sample_events, str(tmp_path / "x"))
+        ledger_write("sample", sample_events, str(tmp_path / "x"))
 
     led = daily_sample_rows(sample_events).cache()
-    assert sample_ledger_write(led, str(tmp_path / "ok")) > 0
+    assert ledger_write("sample", led, str(tmp_path / "ok")) > 0
     with pytest.raises(ValueError, match="keep-predicate"):
-        sample_ledger_write(led, str(tmp_path / "rate"), num=1, den=64)
+        ledger_write("sample", led, str(tmp_path / "rate"), num=1, den=64)
     with pytest.raises(ValueError, match="duplicate id"):
-        sample_ledger_write(
-            led.unionByName(led.limit(3)), str(tmp_path / "dup")
+        ledger_write(
+            "sample", led.unionByName(led.limit(3)), str(tmp_path / "dup")
         )
 
 
@@ -1812,7 +1804,7 @@ def test_stratified_merge_bit_equal_and_replay_semantics(
     the documented marker-guarded column, exactly HLL's n_events."""
     from vectordb_similarity_search_spark.operators.sketches import (
         daily_stratified_sample,
-        stratified_ledger_upsert_batch,
+        ledger_upsert_batch,
     )
 
     path = str(tmp_path / "st")
@@ -1820,7 +1812,7 @@ def test_stratified_merge_bit_equal_and_replay_semantics(
         batch = skewed_events.filter(
             F.pmod(F.xxhash64("event_id"), F.lit(3)) == b
         )
-        stratified_ledger_upsert_batch(batch, path, cap=64, buckets=32)
+        ledger_upsert_batch("stratified", batch, path, cap=64, buckets=32)
 
     def snap(df):
         return sorted(
@@ -1834,8 +1826,8 @@ def test_stratified_merge_bit_equal_and_replay_semantics(
     )
     assert stored == one_shot  # bit-equal incl. n, any fan-in/partitioning
 
-    stratified_ledger_upsert_batch(
-        skewed_events.filter(F.pmod(F.xxhash64("event_id"), F.lit(3)) == 1),
+    ledger_upsert_batch(
+        "stratified", skewed_events.filter(F.pmod(F.xxhash64("event_id"), F.lit(3)) == 1),
         path,
         cap=64,
         buckets=32,
@@ -1850,7 +1842,7 @@ def test_stratified_validation_and_write_cross_check(
 ):
     from vectordb_similarity_search_spark.operators.sketches import (
         daily_stratified_sample,
-        stratified_ledger_write,
+        ledger_write,
     )
 
     with pytest.raises(ValueError, match="cap"):
@@ -1858,12 +1850,12 @@ def test_stratified_validation_and_write_cross_check(
     with pytest.raises(ValueError, match="buckets"):
         daily_stratified_sample(skewed_events, buckets=0)
     with pytest.raises(ValueError, match="missing columns"):
-        stratified_ledger_write(skewed_events, str(tmp_path / "x"))
+        ledger_write("stratified", skewed_events, str(tmp_path / "x"))
 
     led = daily_stratified_sample(skewed_events, cap=64).cache()
-    assert stratified_ledger_write(led, str(tmp_path / "ok"), cap=64) > 0
+    assert ledger_write("stratified", led, str(tmp_path / "ok"), cap=64) > 0
     with pytest.raises(ValueError, match="contract"):
-        stratified_ledger_write(led, str(tmp_path / "cap"), cap=10)
+        ledger_write("stratified", led, str(tmp_path / "cap"), cap=10)
     broken = led.withColumn("h", F.col("h") + 1)
     with pytest.raises(ValueError, match="contract"):
-        stratified_ledger_write(broken, str(tmp_path / "hash"), cap=64)
+        ledger_write("stratified", broken, str(tmp_path / "hash"), cap=64)

@@ -1156,7 +1156,7 @@ def test_sketch_upsert_rewrites_only_touched_days(spark, tmp_path):
     import os
 
     from vectordb_similarity_search_spark.operators.sketches import (
-        sketch_ledger_upsert_batch,
+        ledger_upsert_batch,
     )
 
     def mk(rows):
@@ -1171,7 +1171,7 @@ def test_sketch_upsert_rewrites_only_touched_days(spark, tmp_path):
         (2, dt.datetime(2026, 3, 2, 9), 2, "click", 1.0),
         (3, dt.datetime(2026, 3, 3, 9), 3, "click", 1.0),
     ]
-    assert sketch_ledger_upsert_batch(mk(base), path) == 3
+    assert ledger_upsert_batch("hll", mk(base), path) == 3
 
     def file_state(day):
         d = os.path.join(path, f"day={day}")
@@ -1183,8 +1183,8 @@ def test_sketch_upsert_rewrites_only_touched_days(spark, tmp_path):
 
     before_d1 = file_state("2026-03-01")
     before_d3 = file_state("2026-03-03")
-    touched = sketch_ledger_upsert_batch(
-        mk([(4, dt.datetime(2026, 3, 2, 15), 9, "view", 1.0)]), path
+    touched = ledger_upsert_batch(
+        "hll", mk([(4, dt.datetime(2026, 3, 2, 15), 9, "view", 1.0)]), path
     )
     assert touched == 1
     assert file_state("2026-03-01") == before_d1

@@ -34,11 +34,12 @@ from ..util import restore_snapshot, swap_snapshot
 
 
 def _invalidate_foreign_scan_caches(path: str) -> None:
-    """Any table this writer rewrites may also be probed through the ANN
-    index-scan cache (operators/ann), the streaming ledger-audit scan
-    cache (streaming/audit), or a memoized registry plan — a cached plan
-    pins the old file listing and would read deleted files after the
-    rewrite. One helper does all three (util.invalidate_snapshot_caches);
+    """Any table this writer rewrites may also be probed through the
+    fixture-table scan cache (sources/tables), the ANN index-scan cache
+    (operators/ann), the streaming ledger-audit scan cache
+    (streaming/audit), or a memoized registry plan — a cached plan pins
+    the old file listing and would read deleted files after the rewrite.
+    One helper does all four (util.invalidate_snapshot_caches);
     this is the writer-side hook for the PARTITIONED rewrite paths, which
     rename individual partition dirs and never go through swap_snapshot
     (round-10 review finding — swap_snapshot invalidates on its own, so
@@ -585,11 +586,14 @@ def merge_parquet_partitioned(
         # (partition columns ride at their read positions) BEFORE any dir
         # carries mixed footers — see the crash-honesty note above
         _write_schema_sidecar(table_path, full.schema)
-    n = _reconcile_partition_dirs(table_path, tmp_root, existing)
-    # invalidate AFTER the partition-dir renames land — a plan rebuilt
-    # between an early eviction and the renames would pin the old listing
-    _invalidate_foreign_scan_caches(table_path)
-    return n
+    try:
+        return _reconcile_partition_dirs(table_path, tmp_root, existing)
+    finally:
+        # invalidate AFTER the partition-dir renames land — a plan rebuilt
+        # between an early eviction and the renames would pin the old
+        # listing — and also when a rename raised part-way, since the
+        # renames before it already changed the listing
+        _invalidate_foreign_scan_caches(table_path)
 
 
 def _validate_pruned_partitioning(
@@ -772,6 +776,7 @@ def scd2_apply_partitioned(
     tmp_root = f"{table_path.rstrip('/')}__pscd2_{uuid.uuid4().hex[:8]}"
     snapshot.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp_root)
     _raise_if_stale(obs, tmp_root)
-    n = _reconcile_partition_dirs(table_path, tmp_root, existing)
-    _invalidate_foreign_scan_caches(table_path)
-    return n
+    try:
+        return _reconcile_partition_dirs(table_path, tmp_root, existing)
+    finally:
+        _invalidate_foreign_scan_caches(table_path)

@@ -30,11 +30,14 @@ mandated large-scale-pipeline superset.
 
 from __future__ import annotations
 
+import inspect
 import json
 import os
 import shutil
+from dataclasses import dataclass
+from typing import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 # 2^12 registers ≈ 0.8% relative standard error — the classic
@@ -225,25 +228,16 @@ def sketch_ledger_repair(path: str) -> int:
     return fixed
 
 
-def _hll_meta(key_col: str, type_col: str, ts_col: str, lg_k: int) -> dict:
-    return {
-        "kind": "hll",
-        "key_col": key_col,
-        "type_col": type_col,
-        "ts_col": ts_col,
-        "lg_k": lg_k,
-    }
-
-
 def _staged_day_upsert(path: str, delta: DataFrame, merge_fn, meta: dict) -> int:
-    """Shared O(touched-days) persisted-ledger upsert engine (HLL and
-    CMS ledgers delegate here; ``merge_fn(stored_slice, delta)`` is the
+    """Shared O(touched-days) persisted-ledger upsert engine (every kind
+    in :data:`LEDGER_KINDS` delegates here through
+    :func:`ledger_upsert_batch`; ``merge_fn(stored_slice, delta)`` is the
     only sketch-specific part): bootstrap a missing store from the delta
     alone; otherwise repair any torn commit, validate the stored
     configuration, read back ONLY the touched day partitions, merge,
     STAGE the merged slice executor-side (no sketch state through the
     driver), and swap day dirs under an O_EXCL pending marker. Crash
-    semantics as documented on :func:`sketch_ledger_upsert_batch`.
+    semantics as documented on :func:`ledger_upsert_batch`.
     SINGLE-WRITER: concurrent upserts against one ledger path are a
     contract violation (the entry-time repair would sweep a live
     writer's staging); a concurrent commit is detected at the marker
@@ -260,8 +254,8 @@ def _staged_day_upsert(path: str, delta: DataFrame, merge_fn, meta: dict) -> int
         # day-partitioned ledger: F.col('day').isin(...) never matches
         # NULL and the dir-name swap would look for 'day=None' while
         # Spark stages '__HIVE_DEFAULT_PARTITION__' — a lossy torn
-        # commit. Refuse loudly; the streaming apply_*_batch paths drop
-        # null-ts rows up front under their documented contract.
+        # commit. Refuse loudly; the streaming apply path drops null-ts
+        # rows up front under its documented contract.
         raise ValueError(
             "ledger delta contains a NULL day (null or unparseable "
             "timestamps): filter null-ts rows before the upsert — a "
@@ -294,7 +288,7 @@ def _staged_day_upsert(path: str, delta: DataFrame, merge_fn, meta: dict) -> int
     except FileExistsError:
         # entry-time repair consumed any CRASHED writer's marker, so a
         # marker here means another LIVE writer committed concurrently —
-        # the single-writer contract (see the upsert docstrings) was
+        # the single-writer contract (see ledger_upsert_batch) was
         # violated; refuse with a actionable error instead of the raw
         # O_EXCL traceback
         raise RuntimeError(
@@ -320,40 +314,14 @@ def _staged_day_upsert(path: str, delta: DataFrame, merge_fn, meta: dict) -> int
     return len(touched)
 
 
-def sketch_ledger_write(
-    ledger: DataFrame,
-    path: str,
-    *,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    lg_k: int = DEFAULT_LG_K,
-) -> int:
-    """Materialize the leaf ledger (binary sketch column round-trips
-    through parquet). Partitioned by day so maintenance and windowed
-    reads prune to the touched days. A ``_ledger_meta.json`` sidecar
-    records the build configuration (key/type/ts columns, lg_k) so the
-    incremental maintenance entry points can validate against it instead
-    of silently accepting a mismatched merge.
-
-    The sidecar is CROSS-CHECKED against the frame before it is trusted
-    (advisory fix: a ledger built one way but written with different
-    kwargs used to get a wrong sidecar, after which correct maintenance
-    was rejected and wrong maintenance validated): the ledger schema
-    must be the canonical ``(day, event_type, n_events, sk)`` and every
-    sketch blob's serialized lgK header byte must equal the claimed
-    ``lg_k`` — both piggyback on the read-back pass the row count
-    already pays. The source key/type/ts column NAMES are not
-    recoverable from the frame and stay caller-asserted."""
-    need = {"day", "event_type", "n_events", "sk"}
-    missing = need - set(ledger.columns)
-    if missing:
-        raise ValueError(
-            f"HLL ledger frame is missing columns {sorted(missing)}; "
-            "build it with daily_hll_sketches"
-        )
-    ledger.write.partitionBy("day").mode("overwrite").parquet(path)
-    back = ledger.sparkSession.read.parquet(path)
+def _hll_check(back: DataFrame, cfg: dict) -> int:
+    """Cross-check of a written HLL ledger (advisory fix: a ledger built
+    one way but written with different kwargs used to get a wrong
+    sidecar, after which correct maintenance was rejected and wrong
+    maintenance validated): every sketch blob's serialized lgK header
+    byte must equal the claimed ``lg_k``. The source key/type/ts column
+    NAMES are not recoverable from the frame and stay caller-asserted."""
+    lg_k = cfg["lg_k"]
     # DataSketches HLL preamble: serialized byte 3 (1-indexed pos 4) is
     # lgK in every mode (LIST/SET/HLL) — verified in tests
     stats = back.agg(
@@ -371,39 +339,7 @@ def sketch_ledger_write(
             f"different lg_k than the claimed {lg_k}; pass the lg_k the "
             "ledger was built with"
         )
-    _write_ledger_meta(path, _hll_meta(key_col, type_col, ts_col, lg_k))
     return stats["n"]
-
-
-def sketch_ledger_merge_batch(
-    spark: SparkSession,
-    batch: DataFrame,
-    path: str,
-    *,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    lg_k: int = DEFAULT_LG_K,
-) -> DataFrame:
-    """Incremental maintenance: fold a NEW batch of raw events into the
-    stored ledger WITHOUT rescanning history — sketch the batch (one
-    pass over batch rows only), then per (day, event_type) union against
-    the stored sketch where one exists. Returns the merged ledger frame
-    LAZILY — no sketch blob ever passes through the driver; the caller
-    snapshots it with :func:`sketch_ledger_upsert_batch` (staged
-    executor-side write) or pins merged == full-rebuild estimates in
-    tests. Late-arriving data for an old day is just another union.
-    Replay semantics: the DISTINCT estimates are replay-safe (HLL union
-    is a register max — identical keys cannot drift it), but the
-    ``n_events`` sum assumes exactly-once batches; an at-least-once
-    upstream must dedupe before merging."""
-    sketch_ledger_repair(path)
-    _check_ledger_meta(path, _hll_meta(key_col, type_col, ts_col, lg_k))
-    stored = spark.read.parquet(path)
-    delta = daily_hll_sketches(
-        batch, key_col=key_col, type_col=type_col, ts_col=ts_col, lg_k=lg_k
-    )
-    return _hll_merge(stored, delta)
 
 
 def _hll_merge(stored: DataFrame, delta: DataFrame) -> DataFrame:
@@ -415,51 +351,6 @@ def _hll_merge(stored: DataFrame, delta: DataFrame) -> DataFrame:
             F.sum("n_events").cast("long").alias("n_events"),
             F.hll_union_agg("sk").alias("sk"),
         )
-    )
-
-
-def sketch_ledger_upsert_batch(
-    batch: DataFrame,
-    path: str,
-    *,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    lg_k: int = DEFAULT_LG_K,
-) -> int:
-    """O(touched-days) ledger maintenance: sketch the batch, read back
-    ONLY the stored day-partitions the batch touches (partition-pruned
-    scan), union-merge, and swap just those day dirs — untouched history
-    is never read or rewritten (the repo's partitioned-merge
-    discipline). Bootstrap: a missing store is created from the batch
-    alone. Returns the number of day partitions written.
-
-    Write path (round-8, replacing the driver-side collect): the merged
-    touched-day slice is STAGED executor-side (one partitioned parquet
-    write under ``_staging`` — an underscore dir, invisible to parquet
-    readers of the store), then committed by swapping day dirs under an
-    O_EXCL pending marker. Sketch blobs never round-trip through the
-    driver, so a year-wide backfill over a high-cardinality type column
-    streams through executors like any other write. Crash semantics: a
-    crash BEFORE the marker leaves the store untouched (stale staging is
-    swept on the next call); a crash mid-commit is repaired from the
-    staged slice by :func:`sketch_ledger_repair` (run at every entry) —
-    no touched-day history can be lost, closing the torn-overwrite
-    window the dynamic-overwrite form had. The residual at-least-once
-    window is the documented one: a crash between a completed commit and
-    the caller's applied-batch marker re-applies one batch's
-    ``n_events`` (estimates cannot drift — register max).
-
-    Contract: SINGLE WRITER per ledger path (serialize maintenance; a
-    detected concurrent commit raises), and NO null-day rows in the
-    batch (null/unparseable ``ts`` cannot live in a day-partitioned
-    store — the streaming apply path drops them before calling here,
-    direct callers must filter or the upsert raises)."""
-    delta = daily_hll_sketches(
-        batch, key_col=key_col, type_col=type_col, ts_col=ts_col, lg_k=lg_k
-    )
-    return _staged_day_upsert(
-        path, delta, _hll_merge, _hll_meta(key_col, type_col, ts_col, lg_k)
     )
 
 
@@ -590,16 +481,6 @@ def cms_estimate(
     )
 
 
-def _cms_meta(key_col: str, ts_col: str, depth: int, width: int) -> dict:
-    return {
-        "kind": "cms",
-        "key_col": key_col,
-        "ts_col": ts_col,
-        "depth": depth,
-        "width": width,
-    }
-
-
 def _cms_merge(stored: DataFrame, delta: DataFrame) -> DataFrame:
     # counter merge IS integer addition — the whole mergeability story
     return (
@@ -610,38 +491,15 @@ def _cms_merge(stored: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def cms_ledger_write(
-    ledger: DataFrame,
-    path: str,
-    *,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
-) -> int:
-    """Materialize a count-min ledger, day-partitioned like the HLL
-    store, with the hash-family configuration (depth/width + column
-    mapping) in the ``_ledger_meta.json`` sidecar — a probe or merge
-    built with a DIFFERENT family would silently read garbage cells, so
-    maintenance validates against the stored config up front.
-
-    The sidecar is CROSS-CHECKED against the frame before it is trusted
-    (advisory fix, same rationale as :func:`sketch_ledger_write`): the
-    schema must be ``(day, r, c, cnt)``, and the cell coordinates must
-    fit the claimed family — a nonempty ledger's max row index must be
-    exactly ``depth - 1`` (every key writes all ``depth`` rows) and its
-    max column must be ``< width``. A width LARGER than the build's is
-    not detectable from coordinates alone and stays caller-asserted, as
-    do the source column names."""
-    need = {"day", "r", "c", "cnt"}
-    missing = need - set(ledger.columns)
-    if missing:
-        raise ValueError(
-            f"CMS ledger frame is missing columns {sorted(missing)}; "
-            "build it with daily_cms_sketches"
-        )
-    ledger.write.partitionBy("day").mode("overwrite").parquet(path)
-    back = ledger.sparkSession.read.parquet(path)
+def _cms_check(back: DataFrame, cfg: dict) -> int:
+    """Cross-check of a written count-min ledger (a probe or merge built
+    with a DIFFERENT hash family would silently read garbage cells): the
+    cell coordinates must fit the claimed family — a nonempty ledger's
+    max row index must be exactly ``depth - 1`` (every key writes all
+    ``depth`` rows) and its max column must be ``< width``. A width
+    LARGER than the build's is not detectable from coordinates alone and
+    stays caller-asserted, as do the source column names."""
+    depth, width = cfg["depth"], cfg["width"]
     stats = back.agg(
         F.count(F.lit(1)).alias("n"),
         F.max("r").alias("max_r"),
@@ -656,36 +514,7 @@ def cms_ledger_write(
             f"(depth={depth}, width={width}); pass the family the "
             "ledger was built with"
         )
-    _write_ledger_meta(path, _cms_meta(key_col, ts_col, depth, width))
     return stats["n"]
-
-
-def cms_ledger_upsert_batch(
-    batch: DataFrame,
-    path: str,
-    *,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
-) -> int:
-    """O(touched-days) count-min maintenance through the SAME staged
-    day-swap engine as the HLL ledger (:func:`_staged_day_upsert`:
-    partition-pruned read-back, executor-side staging, O_EXCL pending
-    marker, lossless crash repair) — only the merge differs, and for CMS
-    it is plain integer addition of counter cells. Unlike HLL estimates,
-    CMS counts are NOT replay-safe by algebra (re-adding a batch doubles
-    its mass), so this path must sit behind an applied-batch marker
-    (streaming/events._apply_once) exactly like the exact ``n_events``
-    column of the HLL ledger. Returns the number of day partitions
-    written. Same single-writer and no-null-day contracts as
-    :func:`sketch_ledger_upsert_batch`."""
-    delta = daily_cms_sketches(
-        batch, key_col=key_col, ts_col=ts_col, depth=depth, width=width
-    )
-    return _staged_day_upsert(
-        path, delta, _cms_merge, _cms_meta(key_col, ts_col, depth, width)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -948,16 +777,6 @@ def _q_names(qs: tuple[float, ...]) -> list[str]:
     return [f"p{str(q).replace('0.', '')}" for q in qs]
 
 
-def _qsk_meta(value_col: str, type_col: str, ts_col: str, k: int) -> dict:
-    return {
-        "kind": "qsk",
-        "value_col": value_col,
-        "type_col": type_col,
-        "ts_col": ts_col,
-        "k": k,
-    }
-
-
 def _qsk_merge(stored: DataFrame, delta: DataFrame) -> DataFrame:
     # like CMS: the merge IS integer addition of bucket counts
     return (
@@ -965,60 +784,6 @@ def _qsk_merge(stored: DataFrame, delta: DataFrame) -> DataFrame:
         .unionByName(delta)
         .groupBy("day", "event_type", "b")
         .agg(F.sum("cnt").cast("long").alias("cnt"))
-    )
-
-
-def qsk_ledger_write(
-    ledger: DataFrame,
-    path: str,
-    *,
-    value_col: str = "value",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    k: int = QSK_SUB_BUCKETS,
-) -> int:
-    """Materialize a rank-sketch ledger, day-partitioned, with the
-    bucketing configuration in the ``_ledger_meta.json`` sidecar (a
-    probe or merge with a different ``k`` reads garbage buckets, so
-    maintenance validates up front). Schema is cross-checked against
-    the frame; ``k`` itself is not recoverable from bucket indices
-    (any k yields in-range longs) and stays caller-asserted, like the
-    CMS width-larger case."""
-    need = {"day", "event_type", "b", "cnt"}
-    missing = need - set(ledger.columns)
-    if missing:
-        raise ValueError(
-            f"rank-sketch ledger frame is missing columns "
-            f"{sorted(missing)}; build it with daily_qsk_sketches"
-        )
-    ledger.write.partitionBy("day").mode("overwrite").parquet(path)
-    _write_ledger_meta(path, _qsk_meta(value_col, type_col, ts_col, k))
-    return ledger.sparkSession.read.parquet(path).count()
-
-
-def qsk_ledger_upsert_batch(
-    batch: DataFrame,
-    path: str,
-    *,
-    value_col: str = "value",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    k: int = QSK_SUB_BUCKETS,
-) -> int:
-    """O(touched-days) rank-sketch maintenance through the SAME staged
-    day-swap engine as the HLL/CMS ledgers (partition-pruned read-back,
-    executor-side staging, O_EXCL pending marker, lossless crash
-    repair); the merge is integer addition of bucket counts. Like CMS —
-    and unlike HLL register-max — bucket counts are NOT replay-safe by
-    algebra, so this path sits behind an applied-batch marker
-    (streaming/events.apply_qsk_batch). Returns the number of day
-    partitions written. Same single-writer and no-null-day contracts as
-    :func:`sketch_ledger_upsert_batch`."""
-    delta = daily_qsk_sketches(
-        batch, value_col=value_col, type_col=type_col, ts_col=ts_col, k=k
-    )
-    return _staged_day_upsert(
-        path, delta, _qsk_merge, _qsk_meta(value_col, type_col, ts_col, k)
     )
 
 
@@ -1243,19 +1008,6 @@ def theta_rollup_distinct(
     )
 
 
-def _theta_meta(
-    key_col: str, type_col: str, ts_col: str, num: int, den: int
-) -> dict:
-    return {
-        "kind": "theta",
-        "key_col": key_col,
-        "type_col": type_col,
-        "ts_col": ts_col,
-        "num": num,
-        "den": den,
-    }
-
-
 def _theta_merge(stored: DataFrame, delta: DataFrame) -> DataFrame:
     # set union IS distinct — idempotent, hence replay-safe by algebra
     return (
@@ -1263,32 +1015,14 @@ def _theta_merge(stored: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def theta_ledger_write(
-    ledger: DataFrame,
-    path: str,
-    *,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    num: int = THETA_NUM,
-    den: int = THETA_DEN,
-) -> int:
-    """Materialize a theta ledger, day-partitioned, sampling-rate config
-    in the sidecar. Cross-check (advisory discipline): the schema must
-    be ``(day, event_type, h)`` and every stored hash must satisfy the
-    claimed keep-predicate ``h mod den < num`` — a ledger sampled at a
-    LOWER rate than claimed can slip through when its kept set is a
-    subset of the claimed one (documented residual, like the CMS
-    width-larger case); a higher-rate or wrong-hash ledger is caught."""
-    need = {"day", "event_type", "h"}
-    missing = need - set(ledger.columns)
-    if missing:
-        raise ValueError(
-            f"theta ledger frame is missing columns {sorted(missing)}; "
-            "build it with daily_theta_sketches"
-        )
-    ledger.write.partitionBy("day").mode("overwrite").parquet(path)
-    back = ledger.sparkSession.read.parquet(path)
+def _theta_check(back: DataFrame, cfg: dict) -> int:
+    """Cross-check of a written theta ledger: every stored hash must
+    satisfy the claimed keep-predicate ``h mod den < num`` — a ledger
+    sampled at a LOWER rate than claimed can slip through when its kept
+    set is a subset of the claimed one (documented residual, like the
+    CMS width-larger case); a higher-rate or wrong-hash ledger is
+    caught."""
+    num, den = cfg["num"], cfg["den"]
     stats = back.agg(
         F.count(F.lit(1)).alias("n"),
         F.coalesce(
@@ -1304,43 +1038,7 @@ def theta_ledger_write(
             f"predicate (h mod {den} < {num}); pass the num/den the "
             "ledger was built with"
         )
-    _write_ledger_meta(
-        path, _theta_meta(key_col, type_col, ts_col, num, den)
-    )
     return stats["n"]
-
-
-def theta_ledger_upsert_batch(
-    batch: DataFrame,
-    path: str,
-    *,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    num: int = THETA_NUM,
-    den: int = THETA_DEN,
-) -> int:
-    """O(touched-days) theta maintenance through the shared staged
-    day-swap engine; the merge is distinct-union, which is IDEMPOTENT —
-    unlike CMS/QSK counts, a replayed batch cannot drift a theta ledger,
-    so the applied-batch marker on the streaming path is purely a cost
-    guard. Returns the number of day partitions written. Same
-    single-writer and no-null-day contracts as
-    :func:`sketch_ledger_upsert_batch`."""
-    delta = daily_theta_sketches(
-        batch,
-        key_col=key_col,
-        type_col=type_col,
-        ts_col=ts_col,
-        num=num,
-        den=den,
-    )
-    return _staged_day_upsert(
-        path,
-        delta,
-        _theta_merge,
-        _theta_meta(key_col, type_col, ts_col, num, den),
-    )
 
 
 def ledger_percentiles(
@@ -1362,9 +1060,10 @@ def ledger_percentiles(
 
 
 def sketch_ledger_retention(path: str, *, keep_days: int) -> list[str]:
-    """Retention GC for ANY day-partitioned sketch ledger — HLL, CMS,
-    QSK, and theta stores share the ``day=YYYY-MM-DD`` layout, so one
-    function serves all four (the ledger sibling of
+    """Retention GC for ANY day-partitioned sketch ledger — the HLL,
+    CMS, QSK, theta, HH, sample and stratified stores of
+    :data:`LEDGER_KINDS` share the ``day=YYYY-MM-DD`` layout, so one
+    function serves all seven (the ledger sibling of
     ``timetravel.vacuum_versions``, round-9): drop day partitions older
     than ``keep_days`` behind the NEWEST stored day. The horizon is
     DATA-relative, not wall-clock — deterministic for a given store, so
@@ -1673,16 +1372,6 @@ def rolling_hh(
     return out.withColumnRenamed("out_day", "day")
 
 
-def _hh_meta(key_col: str, type_col: str, ts_col: str, k: int) -> dict:
-    return {
-        "kind": "hh",
-        "key_col": key_col,
-        "type_col": type_col,
-        "ts_col": ts_col,
-        "k": k,
-    }
-
-
 def _hh_merge_fn(k: int, buckets: int):
     """Same-day summary merge (late data / micro-batches) — the PODS'12
     mergeable-summaries rule: sum counters per key, find ``c_sub`` = the
@@ -1755,35 +1444,17 @@ def _hh_merge_fn(k: int, buckets: int):
     return merge
 
 
-def hh_ledger_write(
-    ledger: DataFrame,
-    path: str,
-    *,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    k: int = HH_K,
-) -> int:
-    """Materialize a heavy-hitters ledger, day-partitioned, summary
-    configuration in the ``_ledger_meta.json`` sidecar. Cross-check
-    (advisory discipline): the schema must be the canonical five
-    columns, no summary may hold MORE than ``k`` items, every stored
-    counter must be positive, ``err`` non-negative, and the mass
-    invariant (b) — ``Σ counters + (k+1)·err ≤ n_events`` — must hold
-    per summary row under the claimed ``k`` (the invariant the merge
-    bound telescopes through; a k LARGER than the build's inflates the
-    (k+1)·err term and is caught here whenever any summary evicted).
-    A SMALLER-k claim on an eviction-free ledger is not detectable from
-    the frame (documented residual, like the CMS width-larger case)."""
-    need = {"day", "event_type", "n_events", "items", "err"}
-    missing = need - set(ledger.columns)
-    if missing:
-        raise ValueError(
-            f"heavy-hitters ledger frame is missing columns "
-            f"{sorted(missing)}; build it with daily_hh_sketches"
-        )
-    ledger.write.partitionBy("day").mode("overwrite").parquet(path)
-    back = ledger.sparkSession.read.parquet(path)
+def _hh_check(back: DataFrame, cfg: dict) -> int:
+    """Cross-check of a written heavy-hitters ledger: no summary may hold
+    MORE than ``k`` items, every stored counter must be positive, ``err``
+    non-negative, and the mass invariant (b) — ``Σ counters + (k+1)·err
+    ≤ n_events`` — must hold per summary row under the claimed ``k`` (the
+    invariant the merge bound telescopes through; a k LARGER than the
+    build's inflates the (k+1)·err term and is caught here whenever any
+    summary evicted). A SMALLER-k claim on an eviction-free ledger is not
+    detectable from the frame (documented residual, like the CMS
+    width-larger case)."""
+    k = cfg["k"]
     mass = F.coalesce(
         F.aggregate(
             "items",
@@ -1827,44 +1498,7 @@ def hh_ledger_write(
             f"{stats['bad_mass']}) do not fit the claimed k={k}; "
             "pass the k the ledger was built with"
         )
-    _write_ledger_meta(path, _hh_meta(key_col, type_col, ts_col, k))
     return stats["n"]
-
-
-def hh_ledger_upsert_batch(
-    batch: DataFrame,
-    path: str,
-    *,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    k: int = HH_K,
-    buckets: int = HH_BUCKETS,
-) -> int:
-    """O(touched-days) heavy-hitters maintenance through the SAME staged
-    day-swap engine as the other four ledgers (partition-pruned
-    read-back, executor-side staging, O_EXCL pending marker, lossless
-    crash repair); the merge is the PODS'12 compress rule of
-    :func:`_hh_merge_fn`. Like CMS/QSK counts — and unlike HLL register
-    max / theta distinct-union — summary counters are NOT replay-safe by
-    algebra (a replayed batch inflates counts), so this path sits behind
-    an applied-batch marker (streaming/events.apply_hh_batch). Returns
-    the number of day partitions written. Same single-writer and
-    no-null-day contracts as :func:`sketch_ledger_upsert_batch`."""
-    delta = daily_hh_sketches(
-        batch,
-        key_col=key_col,
-        type_col=type_col,
-        ts_col=ts_col,
-        k=k,
-        buckets=buckets,
-    )
-    return _staged_day_upsert(
-        path,
-        delta,
-        _hh_merge_fn(k, buckets),
-        _hh_meta(key_col, type_col, ts_col, k),
-    )
 
 
 def hh_estimate(
@@ -2077,19 +1711,6 @@ def rolling_sample_stats(
     return out.withColumnRenamed("out_day", "day")
 
 
-def _sample_meta(
-    id_col: str, ts_col: str, payload: tuple[str, ...], num: int, den: int
-) -> dict:
-    return {
-        "kind": "sample",
-        "id_col": id_col,
-        "ts_col": ts_col,
-        "payload": list(payload),
-        "num": num,
-        "den": den,
-    }
-
-
 def _sample_merge(stored: DataFrame, delta: DataFrame) -> DataFrame:
     # distinct-union on full rows, keyed by (day, id): a row id is
     # unique, so identical replayed rows collapse — idempotent, the
@@ -2097,32 +1718,14 @@ def _sample_merge(stored: DataFrame, delta: DataFrame) -> DataFrame:
     return stored.select(*delta.columns).unionByName(delta).distinct()
 
 
-def sample_ledger_write(
-    ledger: DataFrame,
-    path: str,
-    *,
-    id_col: str = "event_id",
-    ts_col: str = "ts",
-    payload: tuple[str, ...] = ("event_type", "value"),
-    num: int = SAMPLE_NUM,
-    den: int = SAMPLE_DEN,
-) -> int:
-    """Materialize a sample ledger, day-partitioned, sampling config in
-    the sidecar. Cross-check (advisory discipline): the schema must be
-    ``(day, id, *payload)``, every stored id must satisfy the claimed
-    keep-predicate, and ids must be UNIQUE — a duplicate id means the
-    source id column was not a row identity and every estimate is
-    biased (caught here, not in production reads). A lower-rate ledger
-    can slip through a higher-rate claim (the theta residual)."""
-    need = {"day", "id", *payload}
-    missing = need - set(ledger.columns)
-    if missing:
-        raise ValueError(
-            f"sample ledger frame is missing columns {sorted(missing)}; "
-            "build it with daily_sample_rows"
-        )
-    ledger.write.partitionBy("day").mode("overwrite").parquet(path)
-    back = ledger.sparkSession.read.parquet(path)
+def _sample_check(back: DataFrame, cfg: dict) -> int:
+    """Cross-check of a written sample ledger: every stored id must
+    satisfy the claimed keep-predicate, and ids must be UNIQUE — a
+    duplicate id means the source id column was not a row identity and
+    every estimate is biased (caught here, not in production reads). A
+    lower-rate ledger can slip through a higher-rate claim (the theta
+    residual)."""
+    num, den = cfg["num"], cfg["den"]
     stats = back.agg(
         F.count(F.lit(1)).alias("n"),
         F.countDistinct("id").alias("n_ids"),
@@ -2148,42 +1751,7 @@ def sample_ledger_write(
             f"{stats['n'] - stats['n_ids']} duplicate id(s)); pass the "
             "num/den the ledger was built with and a UNIQUE id column"
         )
-    _write_ledger_meta(
-        path, _sample_meta(id_col, ts_col, payload, num, den)
-    )
     return stats["n"]
-
-
-def sample_ledger_upsert_batch(
-    batch: DataFrame,
-    path: str,
-    *,
-    id_col: str = "event_id",
-    ts_col: str = "ts",
-    payload: tuple[str, ...] = ("event_type", "value"),
-    num: int = SAMPLE_NUM,
-    den: int = SAMPLE_DEN,
-) -> int:
-    """O(touched-days) sample maintenance through the shared staged
-    day-swap engine; the merge is distinct-union on (day, id) — like
-    theta, IDEMPOTENT: a replayed batch cannot change the sample, so
-    the streaming applied-batch marker is purely a cost guard. Returns
-    the number of day partitions written. Same single-writer and
-    no-null-day contracts as :func:`sketch_ledger_upsert_batch`."""
-    delta = daily_sample_rows(
-        batch,
-        id_col=id_col,
-        ts_col=ts_col,
-        payload=payload,
-        num=num,
-        den=den,
-    )
-    return _staged_day_upsert(
-        path,
-        delta,
-        _sample_merge,
-        _sample_meta(id_col, ts_col, payload, num, den),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2318,23 +1886,6 @@ def stratified_grouped_stats(
     )
 
 
-def _stratified_meta(
-    id_col: str,
-    ts_col: str,
-    strata: tuple[str, ...],
-    payload: tuple[str, ...],
-    cap: int,
-) -> dict:
-    return {
-        "kind": "stratified",
-        "id_col": id_col,
-        "ts_col": ts_col,
-        "strata": list(strata),
-        "payload": list(payload),
-        "cap": cap,
-    }
-
-
 def _stratified_merge_fn(strata: tuple[str, ...], payload: tuple[str, ...], cap: int):
     def merge(stored: DataFrame, delta: DataFrame) -> DataFrame:
         keys = ["day", *strata]
@@ -2374,31 +1925,14 @@ def _stratified_merge_fn(strata: tuple[str, ...], payload: tuple[str, ...], cap:
     return merge
 
 
-def stratified_ledger_write(
-    ledger: DataFrame,
-    path: str,
-    *,
-    id_col: str = "event_id",
-    ts_col: str = "ts",
-    strata: tuple[str, ...] = ("event_type",),
-    payload: tuple[str, ...] = ("value",),
-    cap: int = STRATIFIED_CAP,
-) -> int:
-    """Materialize a stratified ledger, day-partitioned, config in the
-    sidecar. Cross-check: canonical schema; per (day, strata) at most
-    ``cap`` rows, a single consistent ``n`` with n ≥ m, unique ids, and
-    ``h == xxhash64(id)`` recomputable for every row (a corrupted hash
-    column would silently break the bottom-k merge order)."""
-    keys = ["day", *strata]
-    need = {*keys, "n", "id", "h", *payload}
-    missing = need - set(ledger.columns)
-    if missing:
-        raise ValueError(
-            f"stratified ledger frame is missing columns "
-            f"{sorted(missing)}; build it with daily_stratified_sample"
-        )
-    ledger.write.partitionBy("day").mode("overwrite").parquet(path)
-    back = ledger.sparkSession.read.parquet(path)
+def _stratified_check(back: DataFrame, cfg: dict) -> int:
+    """Cross-check of a written stratified ledger: per (day, strata) at
+    most ``cap`` rows, a single consistent ``n`` with n ≥ m, unique ids,
+    and ``h == xxhash64(id)`` recomputable for every row (a corrupted hash
+    column would silently break the bottom-k merge order). The row count
+    is the sum of the per-stratum counts, so it rides on the same job."""
+    keys = ["day", *cfg["strata"]]
+    cap = cfg["cap"]
     per = back.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("m"),
         F.countDistinct("id").alias("m_ids"),
@@ -2416,6 +1950,7 @@ def stratified_ledger_write(
     )
     stats = per.agg(
         F.count(F.lit(1)).alias("groups"),
+        F.coalesce(F.sum("m"), F.lit(0)).alias("rows"),
         F.coalesce(F.max("m"), F.lit(0)).alias("max_m"),
         F.coalesce(
             F.sum(
@@ -2437,46 +1972,188 @@ def stratified_ledger_write(
             "column that does not equal xxhash64(id)); pass the build "
             "configuration and a UNIQUE id column"
         )
-    _write_ledger_meta(
-        path, _stratified_meta(id_col, ts_col, strata, payload, cap)
-    )
-    return int(
-        back.count()
-    )
+    return int(stats["rows"])
 
 
-def stratified_ledger_upsert_batch(
-    batch: DataFrame,
-    path: str,
-    *,
-    id_col: str = "event_id",
-    ts_col: str = "ts",
-    strata: tuple[str, ...] = ("event_type",),
-    payload: tuple[str, ...] = ("value",),
-    cap: int = STRATIFIED_CAP,
-    buckets: int = HH_BUCKETS,
-) -> int:
-    """O(touched-days) stratified-sample maintenance through the shared
-    staged day-swap engine; the merge is bottom-cap OF THE UNION with n
-    summed — associative AND idempotent (replayed rows collapse by id
-    before the cut), so the streamed ledger is BIT-EQUAL to a one-shot
-    build and the applied-batch marker guards only the additive ``n``
-    column (a replayed batch would double-count it, exactly the HLL
-    n_events situation). Returns the number of day partitions written.
-    Same single-writer and no-null-day contracts as
-    :func:`sketch_ledger_upsert_batch`."""
-    delta = daily_stratified_sample(
-        batch,
-        id_col=id_col,
-        ts_col=ts_col,
-        strata=strata,
-        payload=payload,
-        cap=cap,
-        buckets=buckets,
-    )
-    return _staged_day_upsert(
-        path,
-        delta,
-        _stratified_merge_fn(strata, payload, cap),
-        _stratified_meta(id_col, ts_col, strata, payload, cap),
-    )
+# ---------------------------------------------------------------------------
+# Ledger kinds: ONE write / upsert / merge-batch engine for all seven
+# ---------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class LedgerKind:
+    """Everything the generic ledger entry points need to know about one
+    kind. ``build`` is the kind's ``daily_*`` builder, and its keyword
+    defaults ARE the kind's settable configuration. ``meta_keys`` are the
+    sidecar keys after ``"kind"``, in on-disk order; execution knobs such
+    as ``buckets`` stay out of the sidecar. ``columns(cfg)`` lists the
+    required ledger columns, ``merge(cfg)`` returns the ``(stored,
+    delta) -> merged`` frame function, and ``check(back, cfg)``
+    cross-checks a written ledger in one aggregate job, raising when the
+    frame does not fit the claimed configuration and returning its row
+    count."""
+
+    build: Callable[..., DataFrame]
+    meta_keys: tuple[str, ...]
+    columns: Callable[[dict], tuple[str, ...]]
+    merge: Callable[[dict], Callable[[DataFrame, DataFrame], DataFrame]]
+    check: Callable[[DataFrame, dict], int]
+
+
+# No replay-safe field: every kind goes through the streaming
+# applied-batch marker (streaming/events.apply_ledger_batch), because HLL
+# n_events, stratified n and the CMS/QSK/HH counters are additive.
+LEDGER_KINDS: dict[str, LedgerKind] = {
+    "hll": LedgerKind(
+        daily_hll_sketches,
+        ("key_col", "type_col", "ts_col", "lg_k"),
+        lambda c: ("day", "event_type", "n_events", "sk"),
+        lambda c: _hll_merge,
+        _hll_check,
+    ),
+    "cms": LedgerKind(
+        daily_cms_sketches,
+        ("key_col", "ts_col", "depth", "width"),
+        lambda c: ("day", "r", "c", "cnt"),
+        lambda c: _cms_merge,
+        _cms_check,
+    ),
+    # ``k`` is not recoverable from bucket indices (any k yields in-range
+    # longs), so a rank-sketch ledger is only counted, never cross-checked
+    "qsk": LedgerKind(
+        daily_qsk_sketches,
+        ("value_col", "type_col", "ts_col", "k"),
+        lambda c: ("day", "event_type", "b", "cnt"),
+        lambda c: _qsk_merge,
+        lambda back, c: back.count(),
+    ),
+    "theta": LedgerKind(
+        daily_theta_sketches,
+        ("key_col", "type_col", "ts_col", "num", "den"),
+        lambda c: ("day", "event_type", "h"),
+        lambda c: _theta_merge,
+        _theta_check,
+    ),
+    "hh": LedgerKind(
+        daily_hh_sketches,
+        ("key_col", "type_col", "ts_col", "k"),
+        lambda c: ("day", "event_type", "n_events", "items", "err"),
+        lambda c: _hh_merge_fn(c["k"], c["buckets"]),
+        _hh_check,
+    ),
+    "sample": LedgerKind(
+        daily_sample_rows,
+        ("id_col", "ts_col", "payload", "num", "den"),
+        lambda c: ("day", "id", *c["payload"]),
+        lambda c: _sample_merge,
+        _sample_check,
+    ),
+    "stratified": LedgerKind(
+        daily_stratified_sample,
+        ("id_col", "ts_col", "strata", "payload", "cap"),
+        lambda c: ("day", *c["strata"], "n", "id", "h", *c["payload"]),
+        lambda c: _stratified_merge_fn(c["strata"], c["payload"], c["cap"]),
+        _stratified_check,
+    ),
+}
+
+
+def _ledger_config(
+    kind: str, cfg: dict, *, write: bool
+) -> tuple[LedgerKind, dict, dict]:
+    """Resolve one call's configuration: the kind record, the full
+    builder keywords (defaults filled in), and the sidecar dict. Tuple
+    values are stored as lists, which is how JSON reads them back, so a
+    tuple config compares equal to the stored sidecar. A write takes the
+    sidecar keys only; maintenance takes every builder keyword."""
+    if kind not in LEDGER_KINDS:
+        raise ValueError(
+            f"unknown ledger kind {kind!r}; one of {sorted(LEDGER_KINDS)}"
+        )
+    spec = LEDGER_KINDS[kind]
+    params = inspect.signature(spec.build).parameters
+    full = {
+        n: p.default for n, p in params.items() if p.kind is p.KEYWORD_ONLY
+    }
+    known = spec.meta_keys if write else full
+    unknown = sorted(set(cfg) - set(known))
+    if unknown:
+        raise TypeError(f"{kind} ledger got unexpected config {unknown}")
+    full.update(cfg)
+    meta = {"kind": kind}
+    for key in spec.meta_keys:
+        v = full[key]
+        meta[key] = list(v) if isinstance(v, (list, tuple)) else v
+    return spec, full, meta
+
+
+def ledger_write(kind: str, ledger: DataFrame, path: str, **cfg) -> int:
+    """Materialize a ``kind`` ledger built by its ``daily_*`` builder,
+    partitioned by day so maintenance and windowed reads prune to the
+    touched days. ``cfg`` is the build configuration (the sidecar keys of
+    :data:`LEDGER_KINDS`); it goes into a ``_ledger_meta.json`` sidecar
+    so the maintenance entry points validate against it instead of
+    silently accepting a mismatched merge.
+
+    The sidecar is CROSS-CHECKED against the frame before it is written:
+    the ledger must carry the kind's canonical columns, and the kind's
+    check must accept the read-back under the claimed configuration. The
+    check is one aggregate job, and its row count is the return value."""
+    spec, full, meta = _ledger_config(kind, cfg, write=True)
+    missing = set(spec.columns(full)) - set(ledger.columns)
+    if missing:
+        raise ValueError(
+            f"{kind} ledger frame is missing columns "
+            f"{sorted(missing)}; build it with {spec.build.__name__}"
+        )
+    ledger.write.partitionBy("day").mode("overwrite").parquet(path)
+    n = spec.check(ledger.sparkSession.read.parquet(path), full)
+    _write_ledger_meta(path, meta)
+    return n
+
+
+def ledger_merge_batch(
+    kind: str, batch: DataFrame, path: str, **cfg
+) -> DataFrame:
+    """Incremental maintenance without rescanning history: build the
+    batch's leaves (one pass over batch rows only) and merge them into
+    the stored ledger. Returns the merged ledger frame LAZILY, so no
+    sketch state passes through the driver; :func:`ledger_upsert_batch`
+    is the persisting form, and tests pin merged == full rebuild with
+    this one. Late-arriving data for an old day is just another merge."""
+    spec, full, meta = _ledger_config(kind, cfg, write=False)
+    sketch_ledger_repair(path)
+    _check_ledger_meta(path, meta)
+    stored = batch.sparkSession.read.parquet(path)
+    return spec.merge(full)(stored, spec.build(batch, **full))
+
+
+def ledger_upsert_batch(kind: str, batch: DataFrame, path: str, **cfg) -> int:
+    """O(touched-days) ledger maintenance: build the batch's leaves, read
+    back ONLY the stored day partitions the batch touches
+    (partition-pruned scan), merge, and swap just those day dirs —
+    untouched history is never read or rewritten. Bootstrap: a missing
+    store is created from the batch alone; an empty batch writes
+    nothing. ``cfg`` takes the builder's keywords. Returns the number of
+    day partitions written.
+
+    Write path: the merged touched-day slice is STAGED executor-side
+    (one partitioned parquet write under ``_staging``, an underscore dir
+    that parquet readers of the store skip), then committed by swapping
+    day dirs under an O_EXCL pending marker. Ledger state never
+    round-trips through the driver. Crash semantics: a crash BEFORE the
+    marker leaves the store untouched (stale staging is swept on the next
+    call); a crash mid-commit is repaired from the staged slice by
+    :func:`sketch_ledger_repair`, which runs at every entry, so no
+    touched-day history can be lost. The residual at-least-once window is
+    a crash between a completed commit and the caller's applied-batch
+    marker, which re-applies one batch to the additive columns.
+
+    Contract: SINGLE WRITER per ledger path (serialize maintenance; a
+    detected concurrent commit raises), and NO null-day rows in the
+    batch (null/unparseable ``ts`` cannot live in a day-partitioned
+    store — the streaming apply path drops them before calling here,
+    direct callers must filter or the upsert raises)."""
+    spec, full, meta = _ledger_config(kind, cfg, write=False)
+    delta = spec.build(batch, **full)
+    return _staged_day_upsert(path, delta, spec.merge(full), meta)

@@ -8,6 +8,8 @@ reader, which gives predicate pushdown + column pruning for free.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -82,6 +84,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     _SCAN_CACHE[key] = df
     return df
+
+
+def invalidate_table_scans(path: str) -> None:
+    """Evict every cached scan of the table file at ``path``: a writer
+    rewrote ``<sf_dir>/<name>.parquet``, so a cached plan would list
+    deleted files."""
+    target = os.path.abspath(path)
+    for key in [
+        k for k in _SCAN_CACHE
+        if os.path.abspath(f"{k[1]}/{k[2]}.parquet") == target
+    ]:
+        del _SCAN_CACHE[key]
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

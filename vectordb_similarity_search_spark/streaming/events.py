@@ -16,6 +16,8 @@ the state partitioning. At 100 TB/day you size
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -639,7 +641,7 @@ def sketch_ingest_stream(
     event counts on restart (the estimates still cannot drift)."""
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_sketch_batch(batch_df, batch_id, ledger_path)
+        apply_ledger_batch("hll", batch_df, batch_id, ledger_path)
 
     return (
         events.writeStream.foreachBatch(apply_batch)
@@ -648,13 +650,17 @@ def sketch_ingest_stream(
     )
 
 
-def apply_sketch_batch(
-    batch_df: DataFrame, batch_id: int, ledger_path: str
+def apply_ledger_batch(
+    kind: str, batch_df: DataFrame, batch_id: int, ledger_path: str
 ) -> bool:
-    """The micro-batch apply behind :func:`sketch_ingest_stream`
-    (module-level so replay/audit tooling exercises the PRODUCTION apply
-    path). Returns True if the batch was merged, False if the ledger
-    marked it as a replay.
+    """The micro-batch apply for any sketch-ledger ``kind`` of
+    operators/sketches.LEDGER_KINDS (module-level so replay/audit tooling
+    exercises the PRODUCTION apply path): an O(touched-days)
+    ``ledger_upsert_batch`` behind the applied-batch marker. Returns True
+    if the batch was merged, False if the ledger marked it as a replay.
+    HLL ``n_events``, the CMS/QSK/HH counters and stratified ``n`` are
+    additive, so the marker is what makes those kinds exactly-once; for
+    the theta and sample sets it only saves the work.
 
     Null-ts contract (advisory fix): rows with a NULL/unparseable ``ts``
     cannot live in a day-partitioned ledger (the upsert would raise on
@@ -662,131 +668,23 @@ def apply_sketch_batch(
     they are DROPPED here before the merge — the documented availability
     trade; a pipeline that must not lose malformed rows routes them to a
     dead-letter sink upstream."""
-    from ..operators.sketches import sketch_ledger_upsert_batch
+    from ..operators.sketches import ledger_upsert_batch
 
     return _apply_once(
         batch_id,
         ledger_path,
-        lambda: sketch_ledger_upsert_batch(
-            batch_df.filter(F.col("ts").isNotNull()), ledger_path
+        lambda: ledger_upsert_batch(
+            kind, batch_df.filter(F.col("ts").isNotNull()), ledger_path
         ),
     )
 
 
-def apply_cms_batch(
-    batch_df: DataFrame, batch_id: int, ledger_path: str
-) -> bool:
-    """Micro-batch apply for the COUNT-MIN frequency ledger
-    (operators/sketches.cms_ledger_upsert_batch) behind the same
-    applied-batch marker — CMS counters are NOT replay-safe by algebra
-    (re-adding a batch doubles its mass), so the marker is what makes
-    the stream exactly-once. Null-ts rows are dropped under the
-    :func:`apply_sketch_batch` contract."""
-    from ..operators.sketches import cms_ledger_upsert_batch
-
-    return _apply_once(
-        batch_id,
-        ledger_path,
-        lambda: cms_ledger_upsert_batch(
-            batch_df.filter(F.col("ts").isNotNull()), ledger_path
-        ),
-    )
-
-
-def apply_theta_batch(
-    batch_df: DataFrame, batch_id: int, ledger_path: str
-) -> bool:
-    """Micro-batch apply for the THETA set-operation ledger
-    (operators/sketches.theta_ledger_upsert_batch). The distinct-union
-    merge is IDEMPOTENT — a replayed batch cannot drift the ledger —
-    so the applied-batch marker here is purely a cost guard, not a
-    correctness requirement. Null-ts rows are dropped under the
-    :func:`apply_sketch_batch` contract."""
-    from ..operators.sketches import theta_ledger_upsert_batch
-
-    return _apply_once(
-        batch_id,
-        ledger_path,
-        lambda: theta_ledger_upsert_batch(
-            batch_df.filter(F.col("ts").isNotNull()), ledger_path
-        ),
-    )
-
-
-def apply_qsk_batch(
-    batch_df: DataFrame, batch_id: int, ledger_path: str
-) -> bool:
-    """Micro-batch apply for the QUANTILE rank-sketch ledger
-    (operators/sketches.qsk_ledger_upsert_batch) behind the same
-    applied-batch marker — bucket counts, like CMS counters, are NOT
-    replay-safe by algebra. Null-ts rows are dropped under the
-    :func:`apply_sketch_batch` contract."""
-    from ..operators.sketches import qsk_ledger_upsert_batch
-
-    return _apply_once(
-        batch_id,
-        ledger_path,
-        lambda: qsk_ledger_upsert_batch(
-            batch_df.filter(F.col("ts").isNotNull()), ledger_path
-        ),
-    )
-
-
-def apply_hh_batch(
-    batch_df: DataFrame, batch_id: int, ledger_path: str
-) -> bool:
-    """Micro-batch apply for the HEAVY-HITTERS summary ledger
-    (operators/sketches.hh_ledger_upsert_batch) behind the same
-    applied-batch marker — Misra-Gries counters, like CMS/QSK counts,
-    are NOT replay-safe by algebra (a replayed batch inflates them).
-    Null-ts rows are dropped under the :func:`apply_sketch_batch`
-    contract."""
-    from ..operators.sketches import hh_ledger_upsert_batch
-
-    return _apply_once(
-        batch_id,
-        ledger_path,
-        lambda: hh_ledger_upsert_batch(
-            batch_df.filter(F.col("ts").isNotNull()), ledger_path
-        ),
-    )
-
-
-def apply_sample_batch(
-    batch_df: DataFrame, batch_id: int, ledger_path: str
-) -> bool:
-    """Micro-batch apply for the row-SAMPLE (AQP) ledger
-    (operators/sketches.sample_ledger_upsert_batch). Like theta, the
-    distinct-union-on-id merge is IDEMPOTENT — a replayed batch cannot
-    change the sample — so the applied-batch marker here is purely a
-    cost guard. Null-ts rows are dropped under the
-    :func:`apply_sketch_batch` contract."""
-    from ..operators.sketches import sample_ledger_upsert_batch
-
-    return _apply_once(
-        batch_id,
-        ledger_path,
-        lambda: sample_ledger_upsert_batch(
-            batch_df.filter(F.col("ts").isNotNull()), ledger_path
-        ),
-    )
-
-
-def apply_stratified_batch(
-    batch_df: DataFrame, batch_id: int, ledger_path: str
-) -> bool:
-    """Micro-batch apply for the STRATIFIED bottom-k sample ledger
-    (operators/sketches.stratified_ledger_upsert_batch). The bottom-cap
-    merge is idempotent for the sampled ROWS (replayed rows collapse by
-    id), but the additive ``n`` column is NOT replay-safe — the marker
-    guards it, exactly the HLL n_events situation. Null-ts rows are
-    dropped under the :func:`apply_sketch_batch` contract."""
-    from ..operators.sketches import stratified_ledger_upsert_batch
-
-    return _apply_once(
-        batch_id,
-        ledger_path,
-        lambda: stratified_ledger_upsert_batch(
-            batch_df.filter(F.col("ts").isNotNull()), ledger_path
-        ),
-    )
+# One name per kind, kept because perfbench/ingest.py imports them and
+# that benchmark is frozen (it sits under BENCHMARK.json "paths").
+apply_sketch_batch = functools.partial(apply_ledger_batch, "hll")
+apply_cms_batch = functools.partial(apply_ledger_batch, "cms")
+apply_qsk_batch = functools.partial(apply_ledger_batch, "qsk")
+apply_theta_batch = functools.partial(apply_ledger_batch, "theta")
+apply_hh_batch = functools.partial(apply_ledger_batch, "hh")
+apply_sample_batch = functools.partial(apply_ledger_batch, "sample")
+apply_stratified_batch = functools.partial(apply_ledger_batch, "stratified")

@@ -65,13 +65,15 @@ def invalidate_snapshot_caches(table_path: str) -> None:
     it is cleared WHOLESALE: correct over clever. Cost is bounded — the
     bench runs its write group last and against scratch copies, and
     plans over the immutable fixture/ledger dirs simply refill once on
-    next use. The path-keyed ANN index and ledger-audit scan caches are
-    evicted per path (same calls the merge writers already made)."""
+    next use. The path-keyed fixture-table, ANN index and ledger-audit
+    scan caches are evicted per path."""
     from .operators.ann import _invalidate_index_scans
     from .plans.catalog import clear_plan_cache
+    from .sources.tables import invalidate_table_scans
     from .streaming.audit import invalidate_audit_scans
 
     clear_plan_cache()
+    invalidate_table_scans(table_path)
     _invalidate_index_scans(table_path)
     invalidate_audit_scans(table_path)
 
